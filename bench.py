@@ -160,7 +160,8 @@ def _local_artifact_path() -> str:
     complete line to the repo keeps per-query history self-sufficient.
     Named after the round the driver will record next: one past the
     highest committed BENCH_r{N}.json (falls back to BENCH_LOCAL.json
-    outside the repo layout)."""
+    outside the repo layout). Never an existing file: a repeat run in
+    the same round gets a `_run2`, `_run3`, ... suffix."""
     import re
 
     root = os.path.dirname(os.path.abspath(__file__))
@@ -169,11 +170,18 @@ def _local_artifact_path() -> str:
         for f in os.listdir(root)
         if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
     ]
-    name = f"BENCH_LOCAL_r{max(rounds) + 1:02d}.json" if rounds else "BENCH_LOCAL.json"
-    return os.path.join(root, name)
+    stem = f"BENCH_LOCAL_r{max(rounds) + 1:02d}" if rounds else "BENCH_LOCAL"
+    path = os.path.join(root, f"{stem}.json")
+    run = 2
+    while os.path.exists(path):
+        path = os.path.join(root, f"{stem}_run{run}.json")
+        run += 1
+    return path
 
 
-def _run_chunk(names: list[str], sf_dir: str) -> dict[str, float]:
+def _run_chunk(
+    names: list[str], sf_dir: str
+) -> tuple[dict[str, float], float]:
     """One chunk's measurement, inside a FRESH process/JVM: warm up
     the chunk's queries at sf0.001, then two measured passes with
     per-query MIN (round-9 verdict item #3 — BASELINE.md rows are

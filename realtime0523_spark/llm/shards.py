@@ -1,5 +1,6 @@
-"""Compressed text-shard ingestion: gzip members as an opaque binary
-column, decompressed by an Arrow-batched `mapInPandas` kernel.
+"""Compressed text-shard ingestion: gzip members, zstd frames and LZ4
+frames as an opaque binary column, decompressed by an Arrow-batched
+`mapInPandas` kernel.
 
 The dominant wire format for web-scale LLM corpora (Common-Crawl
 WET/WARC, most JSONL dumps) is gzip. This module implements the REAL
@@ -9,7 +10,8 @@ FCOMMENT / FHCRC header fields, raw-DEFLATE inflate via stdlib zlib,
 CRC32 + ISIZE trailer verification, and multi-member concatenation
 (wild .gz shards are routinely several members catenated; RFC 1952
 §2.2 requires readers to accept that) — plus a deterministic encoder
-for fixtures, and the Spark kernel `gzip_ingest_stats`.
+for fixtures, and the Spark kernel `gzip_ingest_stats`. zstd and LZ4
+frames decode through the libzstd / liblz4 that pyarrow ships.
 
 Reference parity: realtime0523 has no compressed-shard path (its
 sources are Kafka/JDBC); this implements the training-data-pipeline
@@ -30,6 +32,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 _FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
@@ -77,7 +80,10 @@ def decode_gzip(payload: bytes) -> bytes:
     """Decompress a gzip payload of ONE OR MORE catenated RFC 1952
     members, verifying each member's CRC32 and ISIZE trailer. Raises
     ValueError naming the defect on any framing/checksum violation —
-    a corrupt shard must fail loudly, not feed garbage downstream."""
+    a corrupt shard must fail loudly, not feed garbage downstream.
+    Kept instead of stdlib gzip, whose header reader (Python 3.11
+    `gzip._read_gzip_header`) reads and discards the FHCRC header
+    CRC16 that this parser verifies."""
     raw = bytes(payload)
     out = bytearray()
     pos = 0
@@ -192,21 +198,14 @@ def attach_gzip_shards(
 GZIP_STATS_SCHEMA = "doc_id long, n_bytes bigint, byte_sum bigint"
 
 
-def gzip_ingest_stats(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
+def _ingest_stats(
+    df: DataFrame, decode, id_col: str, media_col: str
 ) -> DataFrame:
-    """Decompress each shard and emit exact integer evidence of the
-    recovered bytes (length + byte-value sum) — what an ingestion
-    stage's checksum/accounting step records per shard. The match
-    against an oracle replaying the raw text proves header walk,
-    inflate, trailer verification and member concatenation byte for
-    byte. Map-only: one row out per shard, payloads never shuffle."""
-
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, n_bytes, sums = [], [], []
             for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                raw = decode_gzip(payload)
+                raw = decode(payload)
                 arr = np.frombuffer(raw, dtype=np.uint8)
                 ids.append(int(doc_id))
                 n_bytes.append(len(raw))
@@ -222,6 +221,18 @@ def gzip_ingest_stats(
     return df.select(id_col, media_col).mapInPandas(
         _stats, schema=GZIP_STATS_SCHEMA
     )
+
+
+def gzip_ingest_stats(
+    df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
+) -> DataFrame:
+    """Decompress each shard and emit exact integer evidence of the
+    recovered bytes (length + byte-value sum) — what an ingestion
+    stage's checksum/accounting step records per shard. The match
+    against an oracle replaying the raw text proves header walk,
+    inflate, trailer verification and member concatenation byte for
+    byte. Map-only: one row out per shard, payloads never shuffle."""
+    return _ingest_stats(df, decode_gzip, id_col, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -410,10 +421,97 @@ def warc_extract_stats(
 
 
 # ---------------------------------------------------------------------------
-# zstd (RFC 8878) — the post-2023 corpus wire format; full pure-Python
-# frame codec in llm/zstd.py (round-13, closing the round-12 verdict's
-# "What's missing" #4). Same adapter/kernel shape as gzip above.
+# zstd (RFC 8878) and LZ4 frames — the .zst / .lz4 corpus wire formats,
+# decoded by the libzstd / liblz4 that pyarrow ships. Both formats share
+# the skippable-frame magic range 0x184D2A50..5F. Same adapter/kernel
+# shape as gzip above.
 # ---------------------------------------------------------------------------
+
+_LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"
+
+
+def _is_skippable(magic: bytes) -> bool:
+    return (
+        len(magic) >= 4
+        and magic[1:4] == b"\x2a\x4d\x18"
+        and 0x50 <= magic[0] <= 0x5F
+    )
+
+
+def _frame_stream_decode(payload: bytes, codec: str) -> bytes:
+    """Decode catenated `codec` frames with pyarrow, after the header
+    checks the library does not make: an empty payload and one holding
+    only skippable frames both decode to b"" there, so both are
+    refused. Library errors re-raise as ValueError naming the codec."""
+    raw = bytes(payload)
+    if not raw:
+        raise ValueError(f"{codec}: empty payload (not even one frame)")
+    pos = 0
+    while len(raw) - pos >= 8 and _is_skippable(raw[pos : pos + 4]):
+        pos += 8 + int.from_bytes(raw[pos + 4 : pos + 8], "little")
+    if pos == len(raw):
+        raise ValueError(f"{codec}: payload holds only skippable frames")
+    if codec == "lz4" and raw[pos : pos + 4] == _LZ4_LEGACY_MAGIC:
+        raise NotImplementedError(
+            "lz4: legacy frame (magic 0x184C2102) is not supported; "
+            "re-compress the shard in the LZ4 frame format"
+        )
+    try:
+        return pa.CompressedInputStream(pa.BufferReader(raw), codec).read()
+    except OSError as exc:
+        raise ValueError(f"{codec}: {exc}") from exc
+
+
+def decode_zstd(payload: bytes) -> bytes:
+    """Decompress one or more catenated zstd frames (skippable frames
+    included), verifying content checksums and frame content sizes."""
+    return _frame_stream_decode(payload, "zstd")
+
+
+def decode_lz4(payload: bytes) -> bytes:
+    """Decompress one or more catenated LZ4 frames (skippable frames
+    included), verifying header, block and content checksums."""
+    return _frame_stream_decode(payload, "lz4")
+
+
+def _compress_frame(raw: bytes, codec: str) -> bytes:
+    sink = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(sink, codec) as out:
+        out.write(raw)
+    return sink.getvalue().to_pybytes()
+
+
+def _attach_frame_shards(
+    df: DataFrame, codec: str, id_col: str, text_col: str, media_col: str
+) -> DataFrame:
+    """Testdata adapter: compress each row's UTF-8 text into `codec`
+    frames the SQL oracle can replay from hex(encode(text)). The shape
+    cycles by doc_id % 2: a single frame, or an 8-byte (empty)
+    skippable frame followed by two catenated data frames holding the
+    text's halves — the skippable dispatch and multi-frame walk."""
+
+    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                raw = (text or "").encode("utf-8")
+                if int(doc_id) % 2 == 0:
+                    payload = _compress_frame(raw, codec)
+                else:
+                    mid = len(raw) // 2
+                    payload = (
+                        struct.pack("<II", 0x184D2A50, 0)
+                        + _compress_frame(raw[:mid], codec)
+                        + _compress_frame(raw[mid:], codec)
+                    )
+                payloads.append(payload)
+            yield pd.DataFrame(
+                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
+            )
+
+    return df.select(id_col, text_col).mapInPandas(
+        _build, schema=f"{id_col} long, {media_col} binary"
+    )
 
 
 def attach_zstd_shards(
@@ -422,100 +520,15 @@ def attach_zstd_shards(
     text_col: str = "text",
     media_col: str = "media",
 ) -> DataFrame:
-    """Testdata adapter: compress each row's UTF-8 text into a zstd
-    payload the SQL oracle can replay from hex(encode(text)). The
-    frame variant cycles by doc_id % 6 so the corpus exercises every
-    decoder path: stored blocks, Huffman literals with direct and
-    FSE-compressed weights, predefined and custom FSE sequence tables,
-    4-stream literals with Treeless/Repeat second blocks, skippable +
-    multi-frame catenation, and the window-descriptor (non-single-
-    segment) header shape. All variants carry the XXH64 content
-    checksum except the multi-frame one's middle skippable frame."""
-    from realtime0523_spark.llm import zstd as ZS
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                variant = int(doc_id) % 6
-                if variant == 0:
-                    payload = ZS.encode_zstd_frame(raw, block_mode="raw")
-                elif variant == 1:
-                    payload = ZS.encode_zstd_frame(
-                        raw, lit_mode="huffman", weights_mode="direct",
-                        seq_mode="predefined",
-                    )
-                elif variant == 2:
-                    payload = ZS.encode_zstd_frame(
-                        raw, lit_mode="huffman", weights_mode="fse",
-                        seq_mode="fse",
-                    )
-                elif variant == 3:
-                    mid = len(raw) // 2
-                    payload = (
-                        ZS.encode_skippable_frame(b"shard-meta", 3)
-                        + ZS.encode_zstd_frame(
-                            raw[:mid], lit_mode="raw", seq_mode="predefined"
-                        )
-                        + ZS.encode_zstd_frame(raw[mid:], block_mode="raw")
-                    )
-                elif variant == 4:
-                    payload = ZS.encode_zstd_frame(
-                        raw, lit_mode="huffman", weights_mode="fse",
-                        seq_mode="fse", four_stream=True, split_blocks=True,
-                    )
-                else:
-                    payload = ZS.encode_zstd_frame(
-                        raw, single_segment=False,
-                    )
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _build, schema=f"{id_col} long, {media_col} binary"
-    )
+    """zstd fixture shards; see _attach_frame_shards."""
+    return _attach_frame_shards(df, "zstd", id_col, text_col, media_col)
 
 
 def zstd_ingest_stats(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
-    """Decompress each zstd shard and emit exact integer evidence of
-    the recovered bytes (length + byte-value sum) — the same
-    accounting contract as gzip_ingest_stats, proving frame walk,
-    entropy decode, sequence execution and checksum verification byte
-    for byte against an oracle that replays the raw text. Map-only:
-    one row out per shard, payloads never shuffle."""
-    from realtime0523_spark.llm.zstd import decode_zstd
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_bytes, sums = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                raw = decode_zstd(payload)
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                ids.append(int(doc_id))
-                n_bytes.append(len(raw))
-                sums.append(int(arr.sum(dtype=np.int64)) if len(raw) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series(n_bytes, dtype="int64"),
-                    "byte_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _stats, schema=GZIP_STATS_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# LZ4 frames — the fast-tier shard format; full pure-Python codec in
-# llm/lz4.py (round-13). Same adapter/kernel shape as gzip/zstd.
-# ---------------------------------------------------------------------------
+    """Decompress each zstd shard; byte accounting per shard."""
+    return _ingest_stats(df, decode_zstd, id_col, media_col)
 
 
 def attach_lz4_shards(
@@ -524,97 +537,34 @@ def attach_lz4_shards(
     text_col: str = "text",
     media_col: str = "media",
 ) -> DataFrame:
-    """Testdata adapter: compress each row's UTF-8 text into an LZ4
-    frame the SQL oracle can replay from hex(encode(text)). The frame
-    variant cycles by doc_id % 5: stored blocks, compressed blocks,
-    per-block checksums, no-content-size/no-checksum minimal headers,
-    and block-DEPENDENT flagging — every decoder path."""
-    from realtime0523_spark.llm import lz4 as L4
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                variant = int(doc_id) % 5
-                if variant == 0:
-                    payload = L4.encode_lz4_frame(raw, stored=True)
-                elif variant == 1:
-                    payload = L4.encode_lz4_frame(raw)
-                elif variant == 2:
-                    payload = L4.encode_lz4_frame(raw, block_checksum=True)
-                elif variant == 3:
-                    payload = L4.encode_lz4_frame(
-                        raw, content_checksum=False, content_size=False
-                    )
-                else:
-                    payload = L4.encode_lz4_frame(raw, block_indep=False)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), media_col: payloads}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        _build, schema=f"{id_col} long, {media_col} binary"
-    )
+    """LZ4-frame fixture shards; see _attach_frame_shards."""
+    return _attach_frame_shards(df, "lz4", id_col, text_col, media_col)
 
 
 def lz4_ingest_stats(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
-    """Decompress each LZ4 shard and emit the same exact byte
-    accounting as gzip_ingest_stats / zstd_ingest_stats. Map-only."""
-    from realtime0523_spark.llm.lz4 import decode_lz4
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_bytes, sums = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                raw = decode_lz4(payload)
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                ids.append(int(doc_id))
-                n_bytes.append(len(raw))
-                sums.append(int(arr.sum(dtype=np.int64)) if len(raw) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series(n_bytes, dtype="int64"),
-                    "byte_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        _stats, schema=GZIP_STATS_SCHEMA
-    )
+    """Decompress each LZ4 shard; byte accounting per shard."""
+    return _ingest_stats(df, decode_lz4, id_col, media_col)
 
 
 def decode_auto(payload: bytes) -> bytes:
     """Magic-dispatched shard decompression: gzip (RFC 1952, our own
-    member parser), zstd (RFC 8878, our own frame codec — llm/zstd.py,
-    including skippable frames), LZ4 frames (our own codec —
-    llm/lz4.py; the obsolete legacy frame raises a named
-    NotImplementedError inside it), bzip2 and xz (stdlib bz2/lzma —
-    Wikipedia dumps and many academic corpora ship as .bz2/.xz).
-    Every format a corpus shard realistically arrives in now decodes
-    natively; unrecognized magic is a corrupt/unknown shard and fails
-    loudly."""
+    member parser), zstd (RFC 8878, including leading skippable frames)
+    and LZ4 frames (the obsolete legacy frame raises a named
+    NotImplementedError) via pyarrow's libzstd/liblz4, bzip2 and xz
+    (stdlib bz2/lzma — Wikipedia dumps and many academic corpora ship
+    as .bz2/.xz). Unrecognized magic is a corrupt/unknown shard and
+    fails loudly."""
     raw = bytes(payload)
     if raw[:2] == b"\x1f\x8b":
         return decode_gzip(raw)
-    if raw[:4] == b"\x28\xb5\x2f\xfd" or (
-        len(raw) >= 4
-        and raw[1:4] == b"\x2a\x4d\x18"
-        and 0x50 <= raw[0] <= 0x5F
-    ):
+    if raw[:4] == b"\x28\xb5\x2f\xfd" or _is_skippable(raw):
         # zstd magic, or a skippable frame (shared by zstd and lz4 —
-        # route to zstd, whose walker skips it; a following lz4 frame
-        # is a shard-writer error either way)
-        from realtime0523_spark.llm.zstd import decode_zstd
-
+        # route to zstd, which skips it; a following lz4 frame is a
+        # shard-writer error either way)
         return decode_zstd(raw)
-    if raw[:4] in (b"\x04\x22\x4d\x18", b"\x02\x21\x4c\x18"):
-        from realtime0523_spark.llm.lz4 import decode_lz4
-
+    if raw[:4] in (b"\x04\x22\x4d\x18", _LZ4_LEGACY_MAGIC):
         return decode_lz4(raw)
     if raw[:3] == b"BZh":
         import bz2

@@ -100,10 +100,11 @@ def _ensure_full_registry() -> None:
 #     the displaced names LEAD the next round's window (see the
 #     round-8→9 spill notes below), restoring the SLA the round after.
 # Changed-code always preempts staleness: a shipped change without a
-# driver row is worse than a stale green, because the full-registry
-# pytest oracle gate (tests/test_inventory_oracle.py) re-verifies every
-# rotated-out query on every pytest run — driver staleness is rotation
-# hygiene, never a correctness hole.
+# driver row is worse than a stale green. The full-registry pytest
+# oracle gate (tests/test_inventory_oracle.py) re-verifies rotated-out
+# queries only when its `slow` tier runs (`pytest -m slow`); the
+# default pytest run deselects it, so between slow-tier runs a stale
+# driver row is the only engine-vs-oracle check a query has.
 #
 # GROWTH RULE (round-9 verdict item #8, codified): new-query additions
 # per round stay ≤ 12 — the rotation headroom at the current registry
@@ -120,11 +121,11 @@ _PRIORITY: list[str] = [
     # window's spill note promised would lead this round — they hit
     # the 4-round SLA boundary at r13). 3 new queries this round
     # (growth rule: ≤ 12).
-    # Group 1 — ADDED this round (docs_zstd_ingest: the RFC 8878
-    # pure-Python zstd frame codec, llm/zstd.py; docs_lz4_ingest: the
-    # LZ4 frame codec, llm/lz4.py; media_decode_jpeg_lossless: the
-    # T.81 Annex-H SOF3 decoder, llm/multimodal.py — together closing
-    # the zstd/lz4/lossless-JPEG seams), or CHANGED:
+    # Group 1 — ADDED this round (docs_zstd_ingest and
+    # docs_lz4_ingest: zstd / LZ4-frame shard ingestion, since decoded
+    # by pyarrow's libzstd / liblz4 in llm/shards.py;
+    # media_decode_jpeg_lossless: the T.81 Annex-H SOF3 decoder,
+    # llm/multimodal.py), or CHANGED:
     # stream_brand_amount / stream_allocation_split (co-arrival
     # guard: legacy-log named error + >= prune boundary,
     # streaming/allocation.py), media_decode_jpeg_progressive
@@ -135,10 +136,10 @@ _PRIORITY: list[str] = [
     # shared-code change holds two in-window rows; media_decode_jpeg
     # itself stays out of the window because its baseline branch is
     # untouched, and its oracle re-verified this round at sf0.01 by
-    # hand AND re-verifies at sf0.001 in every pytest run). The
-    # docs_gzip_ingest rider slot went to the lossless addition —
+    # hand AND re-verifies at sf0.001 in every slow-tier pytest run).
+    # The docs_gzip_ingest rider slot went to the lossless addition —
     # its parse path is untouched and its oracle re-verifies in
-    # every pytest run:
+    # every slow-tier pytest run:
     "docs_zstd_ingest", "docs_lz4_ingest",
     "media_decode_jpeg_lossless",
     "stream_brand_amount", "stream_allocation_split",
@@ -177,9 +178,9 @@ _PRIORITY: list[str] = [
     # r8-stale cohort, and the optimization driver pass verifies
     # EVERY declared query (not a 50-row window), so each of these
     # holds a fresh full-registry row regardless; they also re-verify
-    # against DuckDB in every pytest run. If a future build round
-    # returns to windowed verification, these 10 lead that window per
-    # the changed-code-preempts-staleness rule.
+    # against DuckDB in every slow-tier pytest run. If a future build
+    # round returns to windowed verification, these 10 lead that window
+    # per the changed-code-preempts-staleness rule.
     # ---- post-window: the r9 cohort (40 rows) leads the round-14
     # rotation, then r10+ keep registration order ----
     "customers_rfm_migration", "docs_quality_model_score",

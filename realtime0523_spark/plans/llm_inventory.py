@@ -1694,25 +1694,18 @@ def q_docs_gzip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(b.bs, 0) AS BIGINT) AS byte_sum
     FROM m LEFT JOIN bysum b USING (doc_id)
     """,
-    "REAL zstd (RFC 8878) shard ingestion (round-13, closing the "
-    "round-12 verdict's named seam): each document becomes a zstd "
-    "payload whose frame shape cycles by doc_id%6 — stored blocks, "
-    "Huffman literals (direct AND FSE-compressed weight descriptions), "
-    "predefined AND custom FSE sequence tables, 4-stream literals with "
-    "Treeless/Repeat second blocks, skippable+multi-frame catenation, "
-    "and the window-descriptor header — then decompressed by the full "
-    "pure-Python frame decoder (llm/zstd.py::decode_zstd — frame "
-    "header walk, FSE NCount parse + table build, canonical Huffman "
-    "with implied last weight, two-state interleaved weight decode, "
-    "the init-LL,OF,ML/update-LL,ML,OF sequence state order, 3-slot "
-    "repeat-offset history, overlapping-match execution, XXH64 "
-    "content-checksum verification with xxhash64 implemented "
-    "in-repo), then exact byte accounting per shard. The oracle "
+    "zstd (RFC 8878) shard ingestion: each document becomes a zstd "
+    "payload whose shape alternates by doc_id%2 — one frame, or an "
+    "empty skippable frame followed by two catenated frames holding "
+    "the text's halves — written and decoded by the libzstd pyarrow "
+    "ships (llm/shards.py::decode_zstd, which refuses empty and "
+    "skippable-only payloads and re-raises library errors as named "
+    "ValueErrors), then exact byte accounting per shard. The oracle "
     "replays the raw text bytes from hex(encode(text)), so the match "
-    "proves the entire decompression path byte for byte. This is the "
-    "ingestion stage for the .zst corpora (post-2023 Common-Crawl "
-    "derivatives, HF datasets) a 2026 pretraining run actually reads: "
-    "map-only, embarrassingly parallel, payloads never shuffle.",
+    "proves the whole decompression path byte for byte. This is the "
+    "ingestion stage for .zst corpora (post-2023 Common-Crawl "
+    "derivatives, HF datasets): map-only, embarrassingly parallel, "
+    "payloads never shuffle.",
 )
 def q_docs_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime0523_spark.llm import shards as SH
@@ -1736,20 +1729,16 @@ def q_docs_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(b.bs, 0) AS BIGINT) AS byte_sum
     FROM m LEFT JOIN bysum b USING (doc_id)
     """,
-    "REAL LZ4-frame shard ingestion (round-13 — with docs_zstd_ingest "
-    "this closes the LAST codec seam; every wire format corpus shards "
-    "realistically arrive in now decodes natively): each document "
-    "becomes an LZ4 frame whose shape cycles by doc_id%5 — stored "
-    "blocks, greedy-matched compressed blocks, per-block xxh32 "
-    "checksums, minimal headers, block-dependent flagging — then "
-    "decompressed by the full pure-Python frame decoder "
-    "(llm/lz4.py::decode_lz4 — descriptor walk with the "
-    "xxh32-derived header-checksum byte, token/extension block "
-    "decode, overlapping matches, content checksum, skippable "
-    "frames; xxhash32 implemented in-repo), then exact byte "
-    "accounting per shard. The oracle replays the raw text bytes "
-    "from hex(encode(text)), proving the whole path byte for byte. "
-    "Map-only, embarrassingly parallel, payloads never shuffle.",
+    "LZ4-frame shard ingestion, the fast-tier twin of "
+    "docs_zstd_ingest: the same doc_id%2 shapes (one frame, or an "
+    "empty skippable frame plus two catenated frames), written and "
+    "decoded by the liblz4 pyarrow ships (llm/shards.py::decode_lz4 — "
+    "header, block and content checksums verified by the library; "
+    "empty, skippable-only and legacy-frame payloads refused by name), "
+    "then exact byte accounting per shard. The oracle replays the raw "
+    "text bytes from hex(encode(text)), proving the whole path byte "
+    "for byte. Map-only, embarrassingly parallel, payloads never "
+    "shuffle.",
 )
 def q_docs_lz4_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime0523_spark.llm import shards as SH
@@ -1787,10 +1776,9 @@ def q_docs_lz4_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hex(encode(text)), proving decompression + record framing + "
     "type filtering byte for byte. This IS the first stage of a "
     "web-scale corpus build; map-only, one row per shard, payloads "
-    "never shuffle. bzip2/xz shards decode via the same module's "
-    "magic-dispatched decode_auto (stdlib) and zstd via the round-13 "
-    "in-repo frame codec (llm/zstd.py); lz4 raises the one remaining "
-    "named codec seam.",
+    "never shuffle. The same module's magic-dispatched decode_auto "
+    "also takes bzip2/xz shards (stdlib) and zstd/LZ4 frames "
+    "(pyarrow's libzstd/liblz4).",
 )
 def q_docs_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime0523_spark.llm import shards as SH

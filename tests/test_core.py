@@ -227,3 +227,23 @@ def test_bench_host_factor_normalization_contract():
         "arrow_s": 1.0
     }
     assert bench._host_factor({"arrow_s": 0.0}) is None
+
+
+def test_bench_sidecar_path_never_overwrites(tmp_path, monkeypatch):
+    """The sidecar is named one round past the newest BENCH_r{N}.json,
+    and a repeat run in that round gets a fresh `_runK` name instead of
+    overwriting the earlier sidecar."""
+    import bench
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._local_artifact_path() == str(tmp_path / "BENCH_LOCAL.json")
+    (tmp_path / "BENCH_r14.json").write_text("{}")
+    first = tmp_path / "BENCH_LOCAL_r15.json"
+    assert bench._local_artifact_path() == str(first)
+    first.write_text("{}")
+    second = bench._local_artifact_path()
+    assert second == str(tmp_path / "BENCH_LOCAL_r15_run2.json")
+    (tmp_path / "BENCH_LOCAL_r15_run2.json").write_text("{}")
+    assert bench._local_artifact_path() == str(
+        tmp_path / "BENCH_LOCAL_r15_run3.json"
+    )

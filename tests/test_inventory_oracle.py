@@ -44,6 +44,8 @@ def test_query_matches_oracle(spark, con, name):
         "media_decode_jpeg",
         "docs_gzip_ingest",
         "docs_warc_extract",
+        "docs_zstd_ingest",
+        "docs_lz4_ingest",
     ],
 )
 def test_media_oracles_hold_on_non_ascii(spark, tmp_path, name):

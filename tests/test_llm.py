@@ -14,6 +14,7 @@ from realtime0523_spark.llm.dedup import (
     simhash_pairs,
 )
 from realtime0523_spark.llm.multimodal import attach_media, decode_image, media_features
+from realtime0523_spark.llm.shards import _compress_frame
 from realtime0523_spark.llm.similarity import ann_topk_ivf, ann_topk_lsh, cosine_topk
 from realtime0523_spark.llm.text import lang_guess
 from tests.conftest import SF_SMOKE
@@ -2538,8 +2539,8 @@ def test_warc_parse_roundtrip_and_validation():
     assert decode_auto(bz2.compress(b"wiki dump")) == b"wiki dump"
     assert decode_auto(lzma.compress(b"academic corpus")) == b"academic corpus"
     assert decode_auto(encode_gzip_member(b"cc shard")) == b"cc shard"
-    # zstd and lz4 magics now dispatch to the round-13 frame codecs
-    # (see test_zstd_decode_auto_dispatch / test_lz4_decode_auto);
+    # zstd and lz4 magics dispatch to pyarrow's libzstd/liblz4 (see
+    # test_zstd_decode_auto_dispatch / test_lz4_decode_auto_and_ingest_twin);
     # unrecognized magic fails loudly
     with pytest.raises(ValueError, match="unrecognized magic"):
         decode_auto(b"\x00\x11\x22\x33 not-a-shard")
@@ -2913,159 +2914,135 @@ def test_jpeg_metadata_segments_are_skipped():
         assert (decode_jpeg(patched) == decode_jpeg(whole)).all()
 
 
-def test_zstd_roundtrip_all_frame_shapes():
-    """Round-13 zstd codec (RFC 8878, llm/zstd.py): every decoder path
-    round-trips — stored/RLE/compressed blocks, raw/RLE/Huffman
-    literals (direct and FSE-compressed weights, 1- and 4-stream),
-    predefined/custom/Repeat sequence tables, Treeless literals,
-    multi-block frames, window-descriptor headers, checksums."""
+def _skippable(content: bytes) -> bytes:
+    import struct
+
+    return struct.pack("<II", 0x184D2A50, len(content)) + content
+
+
+@pytest.mark.parametrize("codec", ["zstd", "lz4"])
+def test_frame_codec_roundtrip_and_refusals(codec):
+    """decode_zstd / decode_lz4 round-trip past the 128 KiB zstd block
+    maximum, walk skippable + catenated frames, and refuse empty,
+    skippable-only, truncated and trailing-garbage payloads with a
+    ValueError naming the codec."""
     import random
 
-    from realtime0523_spark.llm import zstd as Z
+    from realtime0523_spark.llm.shards import decode_lz4, decode_zstd
 
-    random.seed(7)
-    texts = [
-        b"", b"a", b"hello world, hello world, hello world! " * 9,
-        bytes(random.randrange(256) for _ in range(500)),
-        (b"the quick brown fox jumps over the lazy dog. " * 40)[:1500],
-        b"a" * 39, b"ab" * 300,
-        bytes(random.choices(b"abcdefgh\n ", k=3000)),
-    ]
-    variants = [
-        dict(block_mode="raw", checksum=False),
-        dict(block_mode="raw", checksum=True),
-        dict(block_mode="rle", checksum=True),
-        dict(block_mode="compressed", lit_mode="raw", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="direct", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse", split_blocks=True),
-        dict(block_mode="compressed", lit_mode="huffman",
-             four_stream=True, seq_mode="predefined"),
-        dict(block_mode="compressed", single_segment=False, checksum=True),
-    ]
-    for t in texts:
-        for kw in variants:
-            assert Z.decode_zstd(Z.encode_zstd_frame(t, **kw)) == t
-    # multi-frame catenation with skippable frames interleaved
+    decode = {"zstd": decode_zstd, "lz4": decode_lz4}[codec]
+    rng = random.Random(17)
+    pieces = [rng.randbytes(rng.randrange(4, 40)) for _ in range(64)]
+    big = b"".join(rng.choice(pieces) for _ in range(40_000))[:400_000]
+    assert len(big) == 400_000
+    frame = _compress_frame(big, codec)
+    assert decode(frame) == big
+    assert decode(_compress_frame(b"", codec)) == b""
     blob = (
-        Z.encode_skippable_frame(b"meta")
-        + Z.encode_zstd_frame(b"part one|")
-        + Z.encode_skippable_frame(b"x" * 10, 5)
-        + Z.encode_zstd_frame(b"part two")
+        _skippable(b"shard-meta")
+        + _compress_frame(b"part one|", codec)
+        + _skippable(b"")
+        + _compress_frame(b"part two", codec)
     )
-    assert Z.decode_zstd(blob) == b"part one|part two"
-    # cross-block match window: a frame split into blocks must let
-    # block 2's sequences reach back into block 1's output
-    rep = b"0123456789abcdef" * 40
-    frame = Z.encode_zstd_frame(
-        rep, lit_mode="huffman", weights_mode="fse", seq_mode="fse",
-        split_blocks=True,
-    )
-    assert Z.decode_zstd(frame) == rep
+    assert decode(blob) == b"part one|part two"
+    # the fixture writer's odd-doc shape on an empty document
+    empty_halves = _skippable(b"") + _compress_frame(b"", codec) * 2
+    assert decode(empty_halves) == b""
+    with pytest.raises(ValueError, match=f"{codec}: empty payload"):
+        decode(b"")
+    with pytest.raises(ValueError, match=f"{codec}: .*only skippable"):
+        decode(_skippable(b"meta") + _skippable(b""))
+    with pytest.raises(ValueError, match=f"{codec}: "):
+        decode(frame[:-5])
+    with pytest.raises(ValueError, match=f"{codec}: "):
+        decode(frame + b"trailing garbage")
 
 
-def test_zstd_fuzz_roundtrip():
-    """Randomized alphabets/lengths through every encoder variant —
-    the encoder is deterministic, so any mismatch is a real codec
-    defect, not flake."""
-    import random
-
-    from realtime0523_spark.llm import zstd as Z
-
-    variants = [
-        dict(block_mode="raw"),
-        dict(block_mode="compressed", lit_mode="raw", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="direct", seq_mode="predefined"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse"),
-        dict(block_mode="compressed", lit_mode="huffman",
-             weights_mode="fse", seq_mode="fse", split_blocks=True),
-        dict(block_mode="compressed", lit_mode="huffman",
-             four_stream=True, seq_mode="predefined"),
-    ]
-    random.seed(123)
-    for _ in range(120):
-        n = random.randrange(0, 3000)
-        alpha = random.choice([256, 64, 16, 4, 2])
-        t = bytes(random.randrange(alpha) for _ in range(n))
-        kw = random.choice(variants)
-        assert Z.decode_zstd(Z.encode_zstd_frame(t, **kw)) == t
+# Golden frames written by the reference CLIs (zstd v1.5.7 `--check`,
+# lz4 v1.9.4 `--content-size`, content checksum on by default), so the
+# content-checksum check is pinned against a foreign writer — pyarrow's
+# own writer emits no content checksum. Each body is one stored block
+# whose content starts at the given offset.
+_GOLDEN_FRAMES = {
+    "zstd": (
+        "28b52ffd2426310100676f6c64656e207a737464206672616d653a20636f6e74"
+        "656e7420636865636b73756d206f6ea42077ad",
+        9,
+        b"golden zstd frame: content checksum on",
+    ),
+    "lz4": (
+        "04224d186c402500000000000000fc25000080676f6c64656e206c7a34206672"
+        "616d653a20636f6e74656e7420636865636b73756d206f6e00000000c59444e2",
+        19,
+        b"golden lz4 frame: content checksum on",
+    ),
+}
 
 
-def test_zstd_xxh64_known_vector_and_tails():
-    from realtime0523_spark.llm.zstd import xxh64
+@pytest.mark.parametrize("codec", ["zstd", "lz4"])
+def test_frame_codec_golden_checksum(codec):
+    """A frame from the reference CLI decodes exactly, and one flipped
+    content byte is caught by the content checksum."""
+    from realtime0523_spark.llm.shards import decode_lz4, decode_zstd
 
-    # the canonical published XXH64 empty-input value
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    # every tail path (32-stripe, 8-, 4-, 1-byte remainders) changes
-    # the digest — structural sanity of the tail walk
-    base = bytes(range(256))
-    seen = {xxh64(base[:n]) for n in (0, 1, 4, 8, 31, 32, 33, 44, 47, 64)}
-    assert len(seen) == 10
-    assert xxh64(b"abc") != xxh64(b"abd")
-    assert xxh64(b"abc", seed=1) != xxh64(b"abc")
+    decode = {"zstd": decode_zstd, "lz4": decode_lz4}[codec]
+    hexstr, content_at, text = _GOLDEN_FRAMES[codec]
+    frame = bytes.fromhex(hexstr)
+    assert frame[content_at : content_at + len(text)] == text
+    assert decode(frame) == text
+    bad = bytearray(frame)
+    bad[content_at + 5] ^= 0x01
+    with pytest.raises(ValueError, match=f"{codec}: .*(?i:checksum)"):
+        decode(bytes(bad))
 
 
 def test_zstd_validation_named_errors():
-    """Corrupt shards must fail loudly with named defects (the
-    decode_gzip contract)."""
+    """Corrupt shards must fail loudly (the decode_gzip contract):
+    hand-built frames, each refused with a ValueError naming zstd."""
     import struct
 
     import pytest as _pytest
 
-    from realtime0523_spark.llm import zstd as Z
+    from realtime0523_spark.llm.shards import decode_zstd
 
     with _pytest.raises(ValueError, match="empty payload"):
-        Z.decode_zstd(b"")
-    with _pytest.raises(ValueError, match="bad magic"):
-        Z.decode_zstd(b"\x00\x11\x22\x33" + bytes(20))
-    with _pytest.raises(ValueError, match="block header truncated"):
-        Z.decode_zstd(struct.pack("<IB", 0xFD2FB528, 0x20) + b"\x05")
+        decode_zstd(b"")
+    with _pytest.raises(ValueError, match="zstd: .*Unknown frame descriptor"):
+        decode_zstd(b"\x00\x11\x22\x33" + bytes(20))
+    with _pytest.raises(ValueError, match="zstd: .*Truncated"):
+        decode_zstd(struct.pack("<IB", 0xFD2FB528, 0x20) + b"\x05")
     # reserved block type (3)
     frame = struct.pack("<IBB", 0xFD2FB528, 0x20, 1) + bytes([0x07, 0, 0, 65])
-    with _pytest.raises(ValueError, match="reserved block type"):
-        Z.decode_zstd(frame)
-    # content checksum mismatch: flip a stored byte
-    good = bytearray(Z.encode_zstd_frame(b"hello zstd world", block_mode="raw"))
-    good[-6] ^= 0xFF  # inside the raw block payload
-    with _pytest.raises(ValueError, match="checksum mismatch"):
-        Z.decode_zstd(bytes(good))
-    # frame content size vs regenerated length
-    bad_fcs = bytearray(Z.encode_zstd_frame(b"hello", checksum=False))
-    bad_fcs[5] = 9  # single-segment 1-byte FCS field
-    with _pytest.raises(ValueError, match="content size"):
-        Z.decode_zstd(bytes(bad_fcs))
-    # dictionary ID is the named seam
-    dict_frame = struct.pack("<IBBB", 0xFD2FB528, 0x21, 7, 0)
-    with _pytest.raises(NotImplementedError, match="dictionary"):
-        Z.decode_zstd(dict_frame)
-    # a match reaching before the frame start
-    lit = Z._build_literals_section(b"", "raw", "direct", {})
-    seq = Z._build_sequences_section([(0, 5, 1000)], "predefined", {})
-    body = lit + seq
-    frame = (
-        # FCS=200 so the block maximum admits the 7-byte body; the
-        # offset check fires during block decode, before the FCS check
-        struct.pack("<IBB", 0xFD2FB528, 0x20, 200)
-        + ((len(body) << 3) | (2 << 1) | 1).to_bytes(3, "little")
-        + bytes(body)
+    with _pytest.raises(ValueError, match="zstd: .*corruption"):
+        decode_zstd(frame)
+    # content checksum mismatch: a stored byte of 'hello zstd world' flipped
+    good = bytearray.fromhex(
+        "28b52ffd241081000068656c6c6f207a73746420776f726c647f816860"
     )
-    with _pytest.raises(ValueError, match="before the frame start"):
-        Z.decode_zstd(frame)
+    assert decode_zstd(bytes(good)) == b"hello zstd world"
+    good[-6] ^= 0xFF
+    with _pytest.raises(ValueError, match="zstd: .*checksum"):
+        decode_zstd(bytes(good))
+    # frame content size 9 vs the 5 bytes ('hello') the block regenerates
+    bad_fcs = bytes.fromhex("28b52ffd200929000068656c6c6f")
+    with _pytest.raises(ValueError, match="zstd: .*corruption"):
+        decode_zstd(bad_fcs)
+    # a dictionary ID the decoder was not given
+    dict_frame = struct.pack("<IBBB", 0xFD2FB528, 0x21, 7, 0)
+    with _pytest.raises(ValueError, match="zstd: .*Dictionary"):
+        decode_zstd(dict_frame)
+    # a compressed block whose one sequence (offset 1000, match 5)
+    # reaches before the frame start
+    frame = bytes.fromhex("28b52ffd20c83d0000000100eb050104")
+    with _pytest.raises(ValueError, match="zstd: .*corruption"):
+        decode_zstd(frame)
     # skippable-only payload decodes to nothing — refuse, loudly
+    skippable = struct.pack("<I", 0x184D2A50) + struct.pack("<I", 4) + b"meta"
     with _pytest.raises(ValueError, match="only skippable"):
-        Z.decode_zstd(Z.encode_skippable_frame(b"meta"))
+        decode_zstd(skippable)
     # truncated skippable frame
-    with _pytest.raises(ValueError, match="skippable frame content"):
-        Z.decode_zstd(Z.encode_skippable_frame(b"meta")[:-2])
-    # treeless literals with no prior table in the frame
-    lit_tl = bytes([3 | (0 << 2) | (1 << 4), (1 & 0x3F) | (1 << 6), 0])
-    with _pytest.raises(ValueError, match="no previous"):
-        Z._decode_literals(lit_tl + b"\x01", {}, "block")
+    with _pytest.raises(ValueError, match="zstd: .*Truncated"):
+        decode_zstd(skippable[:-2])
 
 
 def test_zstd_decode_auto_dispatch():
@@ -3074,16 +3051,12 @@ def test_zstd_decode_auto_dispatch():
     test_lz4_decode_auto_and_ingest_twin)."""
     import pytest as _pytest
 
-    from realtime0523_spark.llm import zstd as Z
     from realtime0523_spark.llm.shards import decode_auto, encode_gzip_member
 
-    assert decode_auto(Z.encode_zstd_frame(b"zstd payload")) == b"zstd payload"
-    assert (
-        decode_auto(
-            Z.encode_skippable_frame(b"m") + Z.encode_zstd_frame(b"tail")
-        )
-        == b"tail"
-    )
+    zstd_frame = _compress_frame(b"zstd payload", "zstd")
+    assert decode_auto(zstd_frame) == b"zstd payload"
+    tail = _skippable(b"m") + _compress_frame(b"tail", "zstd")
+    assert decode_auto(tail) == b"tail"
     assert decode_auto(encode_gzip_member(b"gz payload")) == b"gz payload"
     with _pytest.raises(ValueError, match="unrecognized magic"):
         decode_auto(b"\x00\x11\x22\x33" + bytes(8))
@@ -3092,7 +3065,8 @@ def test_zstd_decode_auto_dispatch():
 def test_docs_zstd_ingest_matches_gzip_twin(spark):
     """The zstd ingest query recovers byte-identical accounting to the
     gzip twin on the same documents (both decode to the same raw
-    text), across all six frame variants."""
+    text), across both fixture shapes (single frame; skippable frame
+    plus two catenated frames)."""
     from realtime0523_spark.plans import REGISTRY
 
     got = REGISTRY["docs_zstd_ingest"].fn(spark, SF_SMOKE).collect()
@@ -3100,102 +3074,51 @@ def test_docs_zstd_ingest_matches_gzip_twin(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-def test_lz4_roundtrip_and_fuzz():
-    """Round-13 LZ4 frame codec (llm/lz4.py): stored/compressed
-    blocks, per-block checksums, minimal headers, dependent-block
-    flagging, multi-block frames — all round-trip; deterministic
-    encoder, so failures are codec defects."""
-    import random
-
-    from realtime0523_spark.llm import lz4 as L
-
-    assert L.xxh32(b"") == 0x02CC5D05  # the canonical published vector
-    random.seed(11)
-    texts = [
-        b"", b"x", b"hello world, hello world, hello world! " * 9,
-        bytes(random.randrange(256) for _ in range(500)),
-        b"a" * 5000, b"ab" * 4000,
-        bytes(random.choices(b"abcdefgh ", k=3000)),
-        bytes(random.choices(bytes(range(32)), k=200_000)),  # multi-block
-    ]
-    variants = [
-        dict(stored=True),
-        dict(),
-        dict(block_checksum=True),
-        dict(content_checksum=False, content_size=False),
-        dict(block_indep=False, block_max_code=5),
-        dict(block_max_code=7),
-    ]
-    for t in texts:
-        for kw in variants:
-            assert L.decode_lz4(L.encode_lz4_frame(t, **kw)) == t
-    random.seed(5)
-    for _ in range(150):
-        n = random.randrange(0, 4000)
-        alpha = random.choice([256, 64, 8, 2])
-        t = bytes(random.randrange(alpha) for _ in range(n))
-        kw = random.choice(variants)
-        assert L.decode_lz4(L.encode_lz4_frame(t, **kw)) == t
-    # skippable + multi-frame catenation
-    blob = (
-        L.encode_lz4_frame(b"alpha|")
-        + struct_skippable(b"meta")
-        + L.encode_lz4_frame(b"beta")
-    )
-    assert L.decode_lz4(blob) == b"alpha|beta"
-
-
-def struct_skippable(content: bytes) -> bytes:
-    import struct
-
-    return struct.pack("<II", 0x184D2A50, len(content)) + content
-
-
 def test_lz4_validation_named_errors():
     import struct
 
     import pytest as _pytest
 
-    from realtime0523_spark.llm import lz4 as L
+    from realtime0523_spark.llm.shards import decode_lz4
 
     with _pytest.raises(ValueError, match="empty payload"):
-        L.decode_lz4(b"")
-    with _pytest.raises(ValueError, match="bad magic"):
-        L.decode_lz4(b"\x00\x11\x22\x33" + bytes(8))
+        decode_lz4(b"")
+    with _pytest.raises(ValueError, match="lz4: .*frameType_unknown"):
+        decode_lz4(b"\x00\x11\x22\x33" + bytes(8))
     with _pytest.raises(NotImplementedError, match="legacy frame"):
-        L.decode_lz4(struct.pack("<I", 0x184C2102) + bytes(8))
-    # header checksum byte
-    good = bytearray(L.encode_lz4_frame(b"hello lz4 world"))
-    good[6] ^= 0xFF  # the HC byte (magic 4 + FLG/BD 2)
-    with _pytest.raises(ValueError, match="header checksum"):
-        L.decode_lz4(bytes(good))
+        decode_lz4(struct.pack("<I", 0x184C2102) + bytes(8))
+    # header checksum byte of a 'hello lz4 world' frame
+    good = bytearray.fromhex(
+        "04224d186c400f00000000000000a40f00008068656c6c6f206c7a3420776f726c"
+        "640000000058363f1e"
+    )
+    assert decode_lz4(bytes(good)) == b"hello lz4 world"
+    good[14] ^= 0xFF  # the HC byte (magic 4 + FLG/BD 2 + content size 8)
+    with _pytest.raises(ValueError, match="lz4: .*headerChecksum"):
+        decode_lz4(bytes(good))
     # content checksum: flip a byte INSIDE the stored block (the last
     # 8 frame bytes are EndMark + checksum)
-    good = bytearray(L.encode_lz4_frame(b"hello lz4 world hello lz4"))
-    good[-12] ^= 0xFF
-    with _pytest.raises(ValueError, match="checksum mismatch"):
-        L.decode_lz4(bytes(good))
-    # dictionary ID refusal
-    flg = (0b01 << 6) | 0x20 | 0x01
-    desc = bytes([flg, 4 << 4]) + struct.pack("<I", 42)
-    hdr = (
-        struct.pack("<I", 0x184D2204)
-        + desc
-        + bytes([(L.xxh32(desc) >> 8) & 0xFF])
+    good = bytearray.fromhex(
+        "04224d186c4019000000000000006c1900008068656c6c6f206c7a3420776f726c"
+        "642068656c6c6f206c7a34000000005eebe02c"
     )
-    with _pytest.raises(NotImplementedError, match="dictionary"):
-        L.decode_lz4(hdr)
-    # offset reaching before the window
+    good[-12] ^= 0xFF
+    with _pytest.raises(ValueError, match="lz4: .*contentChecksum"):
+        decode_lz4(bytes(good))
+    # a dictionary-ID header (FLG 0x61, dict id 42) with no blocks
+    hdr = bytes.fromhex("04224d1861402a00000081")
+    with _pytest.raises(ValueError, match="lz4: "):
+        decode_lz4(hdr)
+    # one block whose match (offset 5) reaches before the window
     bad_block = bytes([0x10, ord("A"), 0x05, 0x00])  # 1 lit, off 5, ml 4
     frame = (
-        struct.pack("<I", 0x184D2204)
-        + bytes([0b01 << 6 | 0x20, 4 << 4])
+        bytes.fromhex("04224d18604082")
+        + struct.pack("<I", len(bad_block))
+        + bad_block
+        + struct.pack("<I", 0)
     )
-    frame += bytes([(L.xxh32(frame[4:]) >> 8) & 0xFF])
-    frame += struct.pack("<I", len(bad_block)) + bad_block
-    frame += struct.pack("<I", 0)
-    with _pytest.raises(ValueError, match="before the window"):
-        L.decode_lz4(frame)
+    with _pytest.raises(ValueError, match="lz4: .*decompressionFailed"):
+        decode_lz4(frame)
 
 
 def test_lz4_decode_auto_and_ingest_twin(spark):
@@ -3204,62 +3127,15 @@ def test_lz4_decode_auto_and_ingest_twin(spark):
     byte-identical accounting to the gzip twin."""
     import pytest as _pytest
 
-    from realtime0523_spark.llm import lz4 as L
     from realtime0523_spark.llm.shards import decode_auto
     from realtime0523_spark.plans import REGISTRY
 
-    assert decode_auto(L.encode_lz4_frame(b"lz4 shard")) == b"lz4 shard"
+    assert decode_auto(_compress_frame(b"lz4 shard", "lz4")) == b"lz4 shard"
     with _pytest.raises(NotImplementedError, match="legacy frame"):
         decode_auto(b"\x02\x21\x4c\x18" + bytes(8))
     got = REGISTRY["docs_lz4_ingest"].fn(spark, SF_SMOKE).collect()
     want = REGISTRY["docs_gzip_ingest"].fn(spark, SF_SMOKE).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-
-def test_zstd_decoder_only_paths():
-    """Paths a compliant foreign encoder can emit that our fixture
-    encoder's default shapes don't: RLE literals (all size formats),
-    raw-literal size formats, and the 2-byte Number_of_Sequences
-    header form (>= 128 sequences in one block)."""
-    import random
-
-    from realtime0523_spark.llm import zstd as Z
-
-    # RLE + raw literal section round-trips through the section codec
-    for rs in (1, 5, 31, 32, 300, 4095, 4096, 60000):
-        sec = Z._build_literals_section(b"q" * rs, "rle", "direct", {})
-        lits, used = Z._decode_literals(sec, {}, "t")
-        assert lits == b"q" * rs and used == len(sec)
-        raw = bytes(random.Random(rs).randbytes(rs))
-        sec = Z._build_literals_section(raw, "raw", "direct", {})
-        lits, used = Z._decode_literals(sec, {}, "t")
-        assert lits == raw and used == len(sec)
-    # >=128 sequences in one block: 2-byte n_seq header form
-    rng = random.Random(99)
-    pieces = [rng.randbytes(8) for _ in range(40)]
-    t = b"".join(rng.choice(pieces) for _ in range(1200))
-    for kw in (
-        dict(lit_mode="raw", seq_mode="predefined"),
-        dict(lit_mode="huffman", weights_mode="fse", seq_mode="fse"),
-    ):
-        frame = Z.encode_zstd_frame(t, **kw)
-        assert Z.decode_zstd(frame) == t
-    # count the sequences the encoder actually emitted to pin the
-    # header form exercised
-    seqs, _ = Z._lz77(t)
-    assert len(seqs) >= 128, len(seqs)
-    # and the header codec itself round-trips all three forms
-    for n in (0, 1, 127, 128, 300, 32511, 32512, 50000):
-        blob = bytearray()
-        if n < 128:
-            blob.append(n)
-        elif n <= 0x7EFF:
-            blob += bytes([128 + (n >> 8), n & 0xFF])
-        else:
-            v = n - 0x7F00
-            blob += bytes([255, v & 0xFF, (v >> 8) & 0xFF])
-        got, _ = Z._sequences_header(bytes(blob) + b"\x00", 0, "t")
-        assert got == n, (n, got)
 
 
 # ----------------------------------------------------------------------
@@ -3394,23 +3270,6 @@ def test_media_decode_jpeg_lossless_matches_png_twin(spark):
     )
 
 
-def test_lz4_xxh32_known_vectors():
-    """Pin xxh32 against the published reference vectors (the lz4
-    frame format's header/block/content checksums all derive from
-    it): empty input 0x02CC5D05, 'a' 0x550D7456, 'abc' 0x32D153FF,
-    plus seed sensitivity and a >16-byte input that exercises the
-    4-lane stripe path."""
-    from realtime0523_spark.llm.lz4 import xxh32
-
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"abc") == 0x32D153FF
-    assert xxh32(b"abc", seed=1) != xxh32(b"abc")
-    long = bytes(range(256))
-    assert xxh32(long) == xxh32(bytes(long))  # determinism
-    assert xxh32(long[:16]) != xxh32(long[:17])
-
-
 def test_jpeg_lossless_out_of_range_reconstruction_raises():
     """A corrupt SOF3 entropy stream whose difference pushes the
     mod-2^16 reconstruction outside the sample range must raise the
@@ -3514,3 +3373,28 @@ def test_tokenizer_trainer_driver_matches_distributed(spark, monkeypatch):
     assert bpe_drv == bpe_dst
     assert wp_drv == wp_dst
     assert seg_drv == seg_dst
+
+
+def test_tokenizer_driver_matches_distributed_on_line_separator(
+    spark, monkeypatch
+):
+    """A U+2028 line separator survives the ASCII-whitespace tokenizer
+    inside a word; the distributed spacing must make it its own symbol,
+    as the driver path's list(word) does."""
+    from realtime0523_spark.llm.bpe import segmented_vocab, train_bpe
+
+    docs = spark.createDataFrame(
+        [(1, "ab\u2028cd ab\u2028cd ab\u2028cd xy")],
+        "doc_id long, text string",
+    )
+    runs = []
+    for gate in ("1000000", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", gate)
+        merges = train_bpe(docs, 3)
+        seg = sorted(
+            (r.w, tuple(r.units))
+            for r in segmented_vocab(docs, merges).collect()
+        )
+        runs.append((merges, seg))
+    assert runs[0] == runs[1]
+    assert ("ab\u2028cd", ("ab\u2028c", "d")) in runs[0][1]
