@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from realtime0523_spark.core.driver_gate import driver_path
 from realtime0523_spark.llm.text import tokens
 
 
@@ -138,22 +139,6 @@ def pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-def _vocab_driver_gate() -> int:
-    """Measured-count gate for the driver-side trainer/segmenter
-    (round-14 — the CC/RFM §8 precedent): a (word, freq) vocabulary
-    under this many rows collects once (Arrow) and the merge rounds
-    run in Python, replacing n_merges × (groupBy + argmax collect +
-    fold projection + checkpoint) Spark jobs over the |vocab| table.
-    Above it the distributed rounds run unchanged. Env override
-    SPARK_GRAFT_VOCAB_DRIVER_ROWS (default 2M words — a bounded
-    broadcast-build-side-sized driver hold; a 100 TB corpus's raw
-    word vocabulary can exceed it, and then the distributed path is
-    the right shape)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "2000000"))
-
-
 def _greedy_merge(syms: list, a: str, b: str) -> list:
     """One greedy left-to-right merge pass (segment_word's inner
     loop — the exact _apply_merge fold semantics, odd self-pair runs
@@ -233,14 +218,15 @@ def _collect_vocab(
     vocab_wf: DataFrame,
 ) -> "tuple[list[tuple[str, int]] | None, DataFrame]":
     """(words-or-None, pinned): collects the (word, freq) rows when
-    the MEASURED vocabulary fits the driver gate. Either way the
-    corpus-sized pass runs exactly once — `pinned` is the
+    the MEASURED vocabulary passes core.driver_gate — one Arrow
+    collect and Python merge rounds in place of n_merges × (groupBy +
+    argmax collect + fold projection + checkpoint) Spark jobs. Either
+    way the corpus-sized pass runs exactly once — `pinned` is the
     checkpointed |vocab| table, and the over-gate distributed rounds
     build from it (the original un-pinned shape re-ran the corpus
     pass in round 1's checkpoint)."""
     pinned = vocab_wf.localCheckpoint()
-    n = pinned.count()
-    if not (0 < n <= _vocab_driver_gate()):
+    if not driver_path(pinned.count(), "vocab"):
         return None, pinned
     pdf = pinned.toPandas()
     return list(zip(pdf["w"].tolist(), pdf["freq"].tolist())), pinned
@@ -251,7 +237,7 @@ def train_bpe(
 ) -> list[tuple[str, str]]:
     """Learn `n_merges` BPE merges; returns [(left, right), …] in
     learned order. Stops early if no pair remains. Below the measured
-    vocabulary gate (_vocab_driver_gate) the rounds run driver-side
+    vocabulary gate (_collect_vocab) the rounds run driver-side
     over one Arrow collect (bit-identical merges, parity-tested);
     above it, distributed rounds over the |vocab| table."""
     words, pinned = _collect_vocab(word_counts(docs, text_col))

@@ -65,7 +65,7 @@ def train_wordpiece(
 ) -> list[tuple[str, str]]:
     """Learn `n_merges` WordPiece merges; returns [(left, right), …]
     in learned order. Stops early if no pair remains. Below the
-    measured vocabulary gate (bpe._vocab_driver_gate) the rounds run
+    measured vocabulary gate (bpe._collect_vocab) the rounds run
     driver-side over one Arrow collect with the identical score,
     tie-break and greedy fold (bit-identical merges, parity-tested);
     above it, distributed rounds over the |vocab| table."""

@@ -33,11 +33,10 @@ operator asserts the envelope from the node count.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from realtime0523_spark.core.driver_gate import driver_path
 from realtime0523_spark.llm.clusters import _ckpt_tools
 
 PAGERANK_SCALE = 10**12
@@ -47,38 +46,13 @@ PAGERANK_ITERS = 5
 # Broadcast gate for node-sized state (ranks/degrees) and oriented edge
 # tables in the iterative operators (guide §3.1: pick the strategy
 # deliberately, broadcast the side that fits). A broadcast hash
-# relation costs ~64 B/row, so the 2M default is ~128 MB on the driver
+# relation costs ~64 B/row, so 2M rows is ~128 MB on the driver
 # and each executor — comfortable on cluster-sized executors, far
 # under the 8 GB / 512M-row broadcast cap. Above the gate the joins
 # fall back to the shuffle path unchanged, so the choice is
 # scale-adaptive, not tuned to local[32]; results are identical either
 # way (same join semantics, integer aggregation is order-independent).
-GRAPH_BROADCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_ROWS", str(2_000_000))
-)
-
-# Driver-side iteration gate for the fixed-round graph operators
-# (round-13 optimization, guide §8: decide with small rows — the
-# clusters.py union-find precedent generalized). When a MEASURED edge
-# count fits under this bound, the whole integer-exact iteration runs
-# as numpy array passes on one collected edge list instead of N rounds
-# × (join + aggregate + checkpoint) Spark jobs — on a small graph every
-# one of those jobs is scheduling fixed cost, and on a cluster every
-# round is a barrier. The default is set by MEASUREMENT, not memory:
-# collect + index-prep costs ~2 s per million edges, so against ~5 s of
-# per-query round fixed costs the break-even is ~1M edges — 500k keeps
-# the driver path safely on the winning side (memory is never the
-# binding constraint: 500k int64 edge rows ≈ 8 MB, far under a
-# broadcast build side). The bench-scale co-purchase graph (2.39M
-# directed edges at sf0.1) deliberately stays on the distributed
-# rounds, which its measurements show are faster there; oracle-scale
-# and test graphs take the driver path. Above the gate the distributed
-# rounds run unchanged; the arithmetic is integer fixed point / integer
-# degrees either way, so both paths produce the IDENTICAL table
-# (test-pinned).
-GRAPH_DRIVER_EDGES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_EDGES", str(500_000))
-)
+GRAPH_BROADCAST_ROWS = 2_000_000
 
 
 def _bcast(df: DataFrame, small: bool) -> DataFrame:
@@ -196,7 +170,6 @@ def pagerank_fixed_point(
     damping_pct: int = PAGERANK_DAMPING_PCT,
     scale: int | None = None,
     seeds: DataFrame | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over an (src, dst) edge table in
     exact integer fixed point (see module docstring). Returns
@@ -216,12 +189,11 @@ def pagerank_fixed_point(
     than silently leaking their mass.
 
     When the MEASURED directed edge count (Σ out_deg, free from the
-    guard aggregate) fits under `driver_max_edges` (default
-    GRAPH_DRIVER_EDGES), the identical fixed-point recurrence runs on
-    the driver as numpy passes over one collected edge list
-    (_driver_pagerank) — N rounds of join+agg+checkpoint jobs become
-    two collects, with the same BIGINT results (test-pinned against
-    the distributed path).
+    guard aggregate) passes core.driver_gate, the identical
+    fixed-point recurrence runs on the driver as numpy passes over one
+    collected edge list (_driver_pagerank) — N rounds of
+    join+agg+checkpoint jobs become two collects, with the same BIGINT
+    results (test-pinned against the distributed path).
 
     Scale shape per round (round-13 optimization): the node state
     carries (rank_fp, out_deg, seed flag) in ONE table, so a round is
@@ -310,9 +282,7 @@ def pagerank_fixed_point(
         release(graph_ids)
         raise
     base = ((100 - damping_pct) * scale) // 100
-    if driver_max_edges is None:
-        driver_max_edges = GRAPH_DRIVER_EDGES
-    if (n_edges or 0) <= driver_max_edges:
+    if driver_path(n_edges or 0, "pagerank"):
         try:
             return _driver_pagerank(
                 edges, state, n_iter, damping_pct, scale, base
@@ -444,7 +414,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """k-CORE decomposition by iterative peeling (Seidman, "Network
     structure and minimum degree", Social Networks 1983; the
@@ -492,10 +461,8 @@ def kcore(
     )
     # the canonical table is a materialized checkpoint, so this count
     # is one cheap scan; under the gate the whole peel runs on the
-    # driver (GRAPH_DRIVER_EDGES — undirected canonical rows here)
-    if driver_max_edges is None:
-        driver_max_edges = GRAPH_DRIVER_EDGES
-    if cur.count() <= driver_max_edges:
+    # driver
+    if driver_path(cur.count(), "kcore"):
         try:
             return _driver_kcore(cur, k, rounds)
         finally:
@@ -767,7 +734,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Multi-source breadth-first hop distances over an undirected
     graph — "how many co-purchase hops from the seed set is every
@@ -819,11 +785,8 @@ def bfs_hops(
         )
     )
     # materialized checkpoint → one cheap count; under the gate the
-    # whole expansion runs on the driver (GRAPH_DRIVER_EDGES —
-    # directed rows here, 2× the undirected edge count)
-    if driver_max_edges is None:
-        driver_max_edges = GRAPH_DRIVER_EDGES
-    if e.count() <= driver_max_edges:
+    # whole expansion runs on the driver
+    if driver_path(e.count(), "bfs"):
         try:
             return _driver_bfs(e, seeds, rounds)
         finally:

@@ -247,3 +247,35 @@ def test_bench_sidecar_path_never_overwrites(tmp_path, monkeypatch):
     assert bench._local_artifact_path() == str(
         tmp_path / "BENCH_LOCAL_r15_run3.json"
     )
+
+
+def test_driver_gate_cap_switch_and_log_record(monkeypatch, caplog):
+    """One rule for every gated operator: 0 < n <= DRIVER_ROWS runs on
+    the driver, SPARK_GRAFT_DRIVER_GATE=off forces the distributed
+    path, any other switch value is refused by name, and each decision
+    leaves one INFO record naming family, rows, cap and path."""
+    from realtime0523_spark.core import driver_gate
+    from realtime0523_spark.core.driver_gate import driver_path
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
+    monkeypatch.setattr(driver_gate, "DRIVER_ROWS", 7)
+    caplog.set_level("INFO", logger="realtime0523_spark.driver_gate")
+    assert driver_path(7, "kcore")
+    assert not driver_path(8, "kcore")
+    assert not driver_path(0, "kcore")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "auto")
+    assert driver_path(1, "vocab")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
+    assert not driver_path(1, "vocab")
+    assert [r.getMessage() for r in caplog.records] == [
+        "family=kcore rows=7 cap=7 gate=auto path=driver",
+        "family=kcore rows=8 cap=7 gate=auto path=distributed",
+        "family=kcore rows=0 cap=7 gate=auto path=distributed",
+        "family=vocab rows=1 cap=7 gate=auto path=driver",
+        "family=vocab rows=1 cap=7 gate=off path=distributed",
+    ]
+    assert {r.levelname for r in caplog.records} == {"INFO"}
+    for bad in ("on", "OFF", "", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_GATE"):
+            driver_path(1, "rfm")

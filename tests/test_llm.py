@@ -508,20 +508,24 @@ def test_connected_components_star_matches_union_find(spark, edges):
     auto = {r.doc_id: r.cluster_id
             for r in connected_components(pairs).collect()}
     assert auto == want
-    # ...and auto forced PAST the gate (driver_max_edges=0) must still
-    # agree — the distributed fallback is reachable and identical
-    dist = {r.doc_id: r.cluster_id
-            for r in connected_components(pairs, max_iter=80,
-                                          driver_max_edges=0).collect()}
+    # ...and auto forced PAST the gate (SPARK_GRAFT_DRIVER_GATE=off)
+    # must still agree — the distributed fallback is reachable and
+    # identical (MonkeyPatch.context: hypothesis forbids the
+    # function-scoped monkeypatch fixture)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
+        dist = {r.doc_id: r.cluster_id
+                for r in connected_components(pairs,
+                                              max_iter=80).collect()}
     assert dist == want
 
 
-def test_connected_components_driver_gate_respected(spark):
-    """The auto driver path honors driver_max_edges: at 0 every auto
-    call runs distributed (observable via the propagation raise
-    becoming a star fallback on an under-iterated chain), while the
-    default gate takes the driver path and returns exact labels with
-    far fewer Spark jobs."""
+def test_connected_components_driver_gate_respected(spark, monkeypatch):
+    """The auto driver path honors SPARK_GRAFT_DRIVER_GATE: at off
+    every auto call runs distributed (observable via the propagation
+    raise becoming a star fallback on an under-iterated chain), while
+    the default gate takes the driver path and returns exact labels
+    with far fewer Spark jobs."""
     from realtime0523_spark.llm.clusters import connected_components
 
     chain = spark.createDataFrame(
@@ -536,13 +540,14 @@ def test_connected_components_driver_gate_respected(spark):
         ids = sc.statusTracker().getJobIdsForGroup(None)
         return max(ids) if ids else -1
 
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
     j0 = last_job()
     got = {r.doc_id: r.cluster_id for r in connected_components(chain).collect()}
     driver_jobs = last_job() - j0
     assert got == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
     j0 = last_job()
-    got = {r.doc_id: r.cluster_id
-           for r in connected_components(chain, driver_max_edges=0).collect()}
+    got = {r.doc_id: r.cluster_id for r in connected_components(chain).collect()}
     dist_jobs = last_job() - j0
     assert got == want
     # the point of the gate: the driver path is a fraction of the jobs
@@ -3356,14 +3361,14 @@ def test_tokenizer_trainer_driver_matches_distributed(spark, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "1000000")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
     bpe_drv = train_bpe(docs, 6)
     wp_drv = train_wordpiece(docs, 4)
     seg_drv = sorted(
         (r.w, tuple(r.units))
         for r in segmented_vocab(docs, bpe_drv).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
     bpe_dst = train_bpe(docs, 6)
     wp_dst = train_wordpiece(docs, 4)
     seg_dst = sorted(
@@ -3388,8 +3393,8 @@ def test_tokenizer_driver_matches_distributed_on_line_separator(
         "doc_id long, text string",
     )
     runs = []
-    for gate in ("1000000", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_VOCAB_DRIVER_ROWS", gate)
+    for gate in ("auto", "off"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", gate)
         merges = train_bpe(docs, 3)
         seg = sorted(
             (r.w, tuple(r.units))

@@ -1506,12 +1506,15 @@ def test_rfm_migration_matrix_is_consistent(spark):
     assert ((shares - 1.0).abs() < 1e-6).all()
 
 
-def test_graph_driver_paths_match_distributed(spark):
+def test_graph_driver_paths_match_distributed(spark, monkeypatch, caplog):
     """Round-13: the gated driver-side iteration paths of pagerank
     (uniform + personalized), kcore and bfs_hops return tables
     identical to the distributed rounds (forced past the gate with
-    driver_max_edges=0), and the default gate takes the driver path
-    with far fewer Spark jobs — the point of the gate."""
+    SPARK_GRAFT_DRIVER_GATE=off), and the default gate takes the
+    driver path with far fewer Spark jobs — the point of the gate.
+    Empty inputs take the distributed path under either setting and
+    return what the driver path returned for them: nothing for
+    pagerank and an all-self-loop kcore, the seeds at hop 0 for bfs."""
     import random
 
     from realtime0523_spark.operators.graph import (
@@ -1534,12 +1537,20 @@ def test_graph_driver_paths_match_distributed(spark):
         ids = sc.statusTracker().getJobIdsForGroup(None)
         return max(ids) if ids else -1
 
+    def gate_off(thunk):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
+        try:
+            return thunk()
+        finally:
+            monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE")
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
     j0 = last_job()
     pr_drv = {r.node: r.rank_fp for r in pagerank_fixed_point(e).collect()}
     drv_jobs = last_job() - j0
     j0 = last_job()
     pr_dst = {r.node: r.rank_fp
-              for r in pagerank_fixed_point(e, driver_max_edges=0).collect()}
+              for r in gate_off(lambda: pagerank_fixed_point(e).collect())}
     dst_jobs = last_job() - j0
     assert pr_drv == pr_dst and len(pr_drv) == 60
     assert drv_jobs < dst_jobs
@@ -1547,26 +1558,40 @@ def test_graph_driver_paths_match_distributed(spark):
     pp_drv = {r.node: r.rank_fp
               for r in pagerank_fixed_point(e, seeds=seeds).collect()}
     pp_dst = {r.node: r.rank_fp
-              for r in pagerank_fixed_point(e, seeds=seeds,
-                                            driver_max_edges=0).collect()}
+              for r in gate_off(lambda: pagerank_fixed_point(
+                  e, seeds=seeds).collect())}
     assert pp_drv == pp_dst
 
     for k in (2, 3):
         for rounds in (None, 0, 1, 3):
             kd = sorted(map(tuple, kcore(e, k, rounds=rounds).collect()))
-            kx = sorted(map(tuple,
-                            kcore(e, k, rounds=rounds,
-                                  driver_max_edges=0).collect()))
+            kx = sorted(map(tuple, gate_off(
+                lambda: kcore(e, k, rounds=rounds).collect())))
             assert kd == kx, (k, rounds)
 
     for rounds in (0, 1, 2, 5):
         bd = sorted(map(tuple, bfs_hops(e, seeds, rounds).collect()))
-        bx = sorted(map(tuple,
-                        bfs_hops(e, seeds, rounds,
-                                 driver_max_edges=0).collect()))
+        bx = sorted(map(tuple, gate_off(
+            lambda: bfs_hops(e, seeds, rounds).collect())))
         assert bd == bx, rounds
     # the isolated seed appears at hop 0 on both paths
     assert (999, 0) in bd
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    loops = spark.createDataFrame([(i, i) for i in range(1, 6)],
+                                  "src long, dst long")
+    caplog.clear()
+    with caplog.at_level("INFO", logger="realtime0523_spark.driver_gate"):
+        for run in (lambda f: f(), gate_off):
+            assert run(lambda: pagerank_fixed_point(empty).collect()) == []
+            assert run(lambda: kcore(loops, 2).collect()) == []
+            assert sorted(map(tuple, run(
+                lambda: bfs_hops(empty, seeds, 3).collect()))) == [
+                (1, 0), (7, 0), (999, 0)]
+    gated = [r.getMessage() for r in caplog.records]
+    assert len(gated) == 6 and all(
+        " rows=0 " in m and m.endswith("path=distributed") for m in gated
+    ), gated
 
 
 def test_rfm_driver_scorer_matches_distributed(spark, monkeypatch):
@@ -1594,9 +1619,9 @@ def test_rfm_driver_scorer_matches_distributed(spark, monkeypatch):
     cust = spark.createDataFrame(
         rows, "ck long, last_day date, freq long, mon long"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RFM_DRIVER_ROWS", "1000000")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
     drv = sorted(map(tuple, _rfm_scores_from_metrics(cust).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_RFM_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
     dst = sorted(map(tuple, _rfm_scores_from_metrics(cust).collect()))
     assert drv == dst
     assert len(drv) == 23
@@ -1613,16 +1638,21 @@ def test_equidepth_driver_matches_distributed(spark, monkeypatch):
 
     rows = [(float(i % 13),) for i in range(997)] + [(99.5,)] * 450
     df = spark.createDataFrame(rows, "x double")
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "1000000")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
     drv = sorted(map(tuple, equidepth_histogram(df, F.col("x"), 7).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
     dst = sorted(map(tuple, equidepth_histogram(df, F.col("x"), 7).collect()))
     assert drv == dst
     assert sum(r[3] for r in drv) == len(rows)
     # null values must take the distributed path (ordering semantics)
     dfn = spark.createDataFrame([(1.0,), (None,), (2.0,)], "x double")
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "1000000")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_GATE", raising=False)
     drv_n = sorted(map(tuple, equidepth_histogram(dfn, F.col("x")).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_HIST_DRIVER_ROWS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "off")
     dst_n = sorted(map(tuple, equidepth_histogram(dfn, F.col("x")).collect()))
     assert drv_n == dst_n
+    # an empty input is an empty histogram under either setting
+    dfe = spark.createDataFrame([], "x double")
+    for gate in ("auto", "off"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", gate)
+        assert equidepth_histogram(dfe, F.col("x")).collect() == []
